@@ -3,35 +3,26 @@
 The correctness driver hash-checks only the FIRST 50 entries of
 ``queries()`` in iteration order, so certification must rotate across
 rounds.  The committed order in ``swiftlake_spark/queries/__init__.py``
-was hand-built through round 10; from round 11 on it is generated here
-(VERDICT r10 ask #2) and pinned by ``tests/test_gate_rotation.py`` so a
-hand edit that would let any registry entry exceed 3 rounds of
-staleness fails CI.
+is generated here and pinned by ``tests/test_gate_rotation.py``.
 
-Rotation policy (same convention the r9/r10 verdicts ratified):
-
-1. every query whose last-certified round is the MINIMUM over the union
-   (the staleness boundary) heads the window, in the iteration order of
-   that round's CORRECTNESS file;
-2. queries registered but never driver-certified follow (they must get
-   their first certification before they can enter the rotation);
-3. the remaining queries follow ascending by last-certified round, so
-   the window tail re-certifies the next-oldest block early.
-
-The emitted list is the FULL ordering; the driver window is its first
-50 names.  Steady-state max staleness for a registry of N queries over
-a 50-slot window is ceil(N/50) rounds; the pinning test asserts N <=
-150 so the 3-round invariant stays arithmetically feasible.
+Rotation rule (one sort key): every registered name ordered by (last
+green round, position in that round's CORRECTNESS file), names never
+certified first in registry order.  The checked window is the first
+``WINDOW`` names.  A registry of N names needs ceil(N / WINDOW) windows
+to cover, so that is the staleness bound (:func:`staleness_bound`)
+while a backlog drains; after that every name is re-certified within
+one round less.
 
 Usage:
     python scripts/gen_gate_priority.py           # print the list source
-    python scripts/gen_gate_priority.py --check   # exit 1 if committed != generated
+    python scripts/gen_gate_priority.py --check   # exit 1 if the committed window is stale
 """
 
 from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import re
 import sys
@@ -40,6 +31,12 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
 
 WINDOW = 50  # driver gate width (CORRECTNESS_r*.json have exactly 50 keys)
+
+
+def staleness_bound(n_registered: int) -> int:
+    """B = ceil(N / WINDOW): the fewest rounds in which every one of N
+    registered names can take a window slot."""
+    return math.ceil(n_registered / WINDOW)
 
 
 def _oracle_names() -> frozenset[str]:
@@ -62,15 +59,12 @@ def certified_rounds(
     rows-only-with-no-error fallback applies exclusively to names absent
     from ``all_oracles()`` (non-SQL-expressible queries, where rows-only is
     all the driver ever records).  A ``hash_match: false`` record on an
-    oracle-bearing query therefore never advances its last-green round —
-    the failing query stays at the staleness boundary and HEADS the next
-    window instead of rotating out for up to 4 rounds (the r12 q121 bug).
+    oracle-bearing query therefore never advances its last-green round, so
+    the failing query keeps its place at the head of the next window.
 
     ``exclude_newest=True`` drops the highest-numbered CORRECTNESS file,
-    reconstructing the union the PREVIOUS session committed its window
-    against — the pinning tests accept that one generation of lag so the
-    suite is green at judge handoff (the driver writes the new file after
-    the session ends; VERDICT r11 ask #3).
+    reconstructing the union the previous window was generated from
+    (see :func:`window_is_current`).
     """
     if oracle_names is None:
         oracle_names = _oracle_names()
@@ -93,46 +87,42 @@ def certified_rounds(
 
 
 def generate(
-    registry_names: list[str],
-    certified: dict[str, tuple[int, int]],
-    tier2: frozenset[str] = frozenset(),
+    registry_names: list[str], certified: dict[str, tuple[int, int]]
 ) -> list[str]:
-    """Full gate ordering per the rotation policy above.
-
-    ``tier2`` names (ratified r12, VERDICT r11 ask #4) get ONE round of
-    extra staleness allowance: their effective last-certified round is
-    ``last + 1``, so they queue behind same-age tier-1 queries and may
-    reach 4 rounds of staleness instead of 3.  Tier-2 membership is
-    reserved for verdict-style certification queries whose operator
-    internals are independently pytest-pinned (codec golden fixtures,
-    mutation fuzz, recall bars), so a one-round-later driver check
-    cannot hide a regression the suite would miss.  Feasibility:
-    N1/3 + N2/4 <= window (each tier-1 query consumes a slot at least
-    every 3 rounds, tier-2 every 4).
-    """
+    """Full gate ordering: the rotation rule above as one sort key
+    (never-certified names sort as round -1 at their registry position)."""
     reg_pos = {n: i for i, n in enumerate(registry_names)}
-    known = [n for n in registry_names if n in certified]
-    never = [n for n in registry_names if n not in certified]
-    if not known:
-        return registry_names
-
-    def eff(n: str) -> int:
-        return certified[n][0] + (1 if n in tier2 else 0)
-
-    boundary_round = min(eff(n) for n in known)
-    boundary = [n for n in known if eff(n) == boundary_round]
-    rest = [n for n in known if eff(n) != boundary_round]
-    boundary.sort(key=lambda n: certified[n][1])
-    never.sort(key=lambda n: reg_pos[n])
-    rest.sort(key=lambda n: (eff(n), certified[n][1]))
-    return boundary + never + rest
+    return sorted(registry_names, key=lambda n: certified.get(n, (-1, reg_pos[n])))
 
 
-def _registry_names() -> tuple[list[str], frozenset[str]]:
-    from swiftlake_spark.queries import _GATE_TIER2, REGISTRY, _load_all
+def window_is_current(
+    committed: list[str],
+    registry_names: list[str],
+    repo: str = _REPO,
+    oracle_names: frozenset[str] | None = None,
+) -> bool:
+    """Is ``committed[:WINDOW]`` the generated window?
+
+    One generation of lag is legal: the next CORRECTNESS file is
+    written after a window is committed, so the window generated
+    from the union without the newest round is still current.  A window
+    two or more generations old is a forgotten rotation.
+    """
+    got = list(committed)[:WINDOW]
+    return any(
+        got == generate(
+            registry_names,
+            certified_rounds(repo, exclude_newest=lag, oracle_names=oracle_names),
+        )[:WINDOW]
+        for lag in (False, True)
+    )
+
+
+def _registry_names() -> list[str]:
+    from swiftlake_spark.queries import REGISTRY, _load_all
 
     _load_all()
-    return list(REGISTRY), frozenset(_GATE_TIER2)
+    return list(REGISTRY)
 
 
 def _as_source(names: list[str], certified: dict[str, tuple[int, int]]) -> str:
@@ -150,24 +140,24 @@ def _as_source(names: list[str], certified: dict[str, tuple[int, int]]) -> str:
 
 def main() -> int:
     certified = certified_rounds()
-    names, tier2 = _registry_names()
-    full = generate(names, certified, tier2)
+    names = _registry_names()
+    window = generate(names, certified)[:WINDOW]
     if "--check" in sys.argv:
         from swiftlake_spark.queries import _GATE_PRIORITY
 
-        want = full[: max(len(_GATE_PRIORITY), WINDOW)]
-        if list(_GATE_PRIORITY)[:WINDOW] != want[:WINDOW]:
-            print("MISMATCH: committed _GATE_PRIORITY window != generated")
-            for i, (a, b) in enumerate(zip(list(_GATE_PRIORITY)[:WINDOW], want[:WINDOW])):
+        if not window_is_current(_GATE_PRIORITY, names):
+            print("MISMATCH: committed _GATE_PRIORITY window is more than one round stale")
+            for i, (a, b) in enumerate(zip(list(_GATE_PRIORITY)[:WINDOW], window)):
                 if a != b:
                     print(f"  slot {i}: committed={a} generated={b}")
             return 1
-        print(f"OK: committed window matches generated ({WINDOW} slots, {len(names)} registered)")
+        print(f"OK: committed window is current ({WINDOW} slots, {len(names)} registered)")
         return 0
-    print(_as_source(full[:WINDOW], certified))
-    n_stale = sum(1 for n in full[:WINDOW] if n in certified)
+    print(_as_source(window, certified))
+    n_stale = sum(1 for n in window if n in certified)
     print(
         f"# window={WINDOW} registry={len(names)} "
+        f"staleness bound={staleness_bound(len(names))} "
         f"(certified in window: {n_stale}, new: {WINDOW - n_stale})",
         file=sys.stderr,
     )

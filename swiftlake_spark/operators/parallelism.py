@@ -36,17 +36,7 @@ def spread(df: DataFrame) -> DataFrame:
     shuffle.  Those call sites were reverted; do not re-add without a
     measurement.
     """
-    if not needs_spread(df):
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() >= min(target, 16):
         return df
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-
-def needs_spread(df: DataFrame) -> bool:
-    """True iff ``df`` currently yields fewer partitions than the
-    session's parallelism floor — the condition under which
-    :func:`spread` repartitions (and under which a caller may want to
-    re-collapse a spread-widened relation before persisting it; at any
-    production scan width this is False and both are no-ops)."""
-    spark = df.sparkSession
-    target = spark.sparkContext.defaultParallelism
-    return df.rdd.getNumPartitions() < min(target, 16)
+    return df.repartition(target)

@@ -56,119 +56,68 @@ def _load_all() -> None:
     from swiftlake_spark.queries import corpus  # noqa: F401
 
 
-# Driver-gate rotation (regenerated each round; currently round 14).
+# Gate rotation.
 # The correctness driver hash-checks only the FIRST 50 entries of
 # queries() in iteration order, so certification must rotate: names in
 # _GATE_PRIORITY are emitted first, everything else follows in
-# registration order.  From round 11 on this list is GENERATED by
-# `python scripts/gen_gate_priority.py` from the CORRECTNESS_r*.json
-# union (VERDICT r10 ask #2) and pinned by tests/test_gate_rotation.py:
-#   1. every query at the tier-adjusted staleness boundary (minimum
-#      effective last-certified round over the union) heads the window
-#      — this round the r10 block: q31_sessionization (displaced from
-#      the r13 window by q154's registration — the self-healing
-#      boundary rule puts it first), q32_json_props, and the tier-2
-#      names q143_gif_frames / q144_mixed_images at their 4-round
-#      boundary;
-#   2. queries registered but never driver-certified follow (this
-#      round: q155_incremental_dedup);
-#   3. the next-oldest certified block (r11) fills the remaining slots.
-# Invariant: tier-1 queries are driver-checked at least every 3 rounds,
-# tier-2 every 4; feasibility N1/3 + N2/4 <= 50 is asserted in
-# tests/test_gate_rotation.py.
-# Two-tier staleness (ratified r12, VERDICT r11 ask #4): tier-2 queries
-# tolerate 4 rounds between driver certifications instead of 3.
-# Membership criterion — verdict-style certification queries whose
-# operator internals are ALSO independently pytest-pinned (codec golden
-# fixtures + mutation fuzz, ANN recall bars), so a one-round-later
-# driver check cannot hide a regression the suite would miss.  The
-# generator defers these behind same-age tier-1 names; feasibility is
-# N1/3 + N2/4 <= 50 (asserted in tests/test_gate_rotation.py).
-_GATE_TIER2 = frozenset({
-    "q49_simhash_neardup",   # planted-dup pigeonhole verdict; dedup.py fuzz
-    "q50_ann_lsh_topk",      # recall >= 0.7 bars; similarity.py pytest recall
-    "q53_multimodal_features",  # PPM codec verdict; netpbm pytest goldens
-    "q58_ivf_topk",          # recall >= 0.8 bars; IVF pytest recall
-    "q108_audio_features",   # WAV/G.711/AIFF/FLAC verdict; per-codec suites
-    "q114_video_frames",     # PPM-clip/AVI/Y4M verdict; container suites
-    "q115_semantic_dedup",   # IVF-bucketed SemDeDup verdict; pytest recall
-    "q118_png_features",     # PNG codec verdict; all-layout pytest goldens
-    "q143_gif_frames",       # GIF animation verdict; LZW hypothesis property
-    "q150_image_phash_dedup",  # phash invariance verdict; DCT pytest pins
-    # promoted r13 (VERDICT r12 ask #5 — registry headroom): both are
-    # verdict-style codec certifications whose internals are pinned by
-    # their own pytest suites independent of the driver check
-    "q144_mixed_images",     # 20-kind codec rotation; test_jpeg*/test_fax/
-                             # test_operators goldens + mutation fuzz
-    "q151_media_probe",      # MP3/MP4/WebM/Ogg header walks; test_mediaprobe
-                             # per-container synthesis suites
-})
-
+# registration order.  Rule: order every registered name by (last green
+# round, position in that round's CORRECTNESS file), never-certified
+# names first.  Regenerate each round with
+# `python scripts/gen_gate_priority.py`; tests/test_gate_rotation.py pins it.
 _GATE_PRIORITY = [
-    # last certified r10
-    'q31_sessionization',
-    'q32_json_props',
-    # never driver-certified
-    'q155_incremental_dedup',
     # last certified r11
-    'q117_star_dedup',
-    'q119_sql_pruned_scan',
-    'q33_file_metadata',
-    'q34_select_except',
-    'q35_asof_join',
-    'q36_range_join',
-    'q37_struct_key_join',
-    'q76_pack_sequences',
-    'q98_excess_shippers',
-    'q99_waiting_orders',
-    'q100_sales_opportunity',
-    'q111_nested_evolution',
-    'q112_murmur3_bucket',
-    'q113_iceberg_read',
-    'q116_simhash_md5',
-    'q55_embedding_neardup',
-    'q46_cosine_topk',
-    'q47_embedding_stats',
-    'q38_scd_diff_classify',
-    'q39_map_funcs',
-    'q40_dedup_exact',
-    'q41_dedup_keeper',
-    'q42_text_stats',
-    'q43_ngram_jaccard',
-    'q44_fingerprint',
-    'q45_langid_score',
-    'q60_lateral_join',
-    'q61_scalar_subquery',
-    'q62_grouping_sets',
-    'q106_decimal_exact',
-    'q107_approx_percentile',
-    'q48_minhash_lsh',
-    'q51_text_quality',
-    'q54_bpe_tokens',
-    # last certified r10
-    'q143_gif_frames',
-    # last certified r11
-    'q56_hash_split',
-    # last certified r10
-    'q144_mixed_images',
-    # last certified r11
-    'q146_url_dedup',
-    'q147_char_diversity',
-    'q148_zipf_slope',
-    'q149_token_budget',
+    'q49_simhash_neardup',
+    'q50_ann_lsh_topk',
+    'q58_ivf_topk',
+    'q53_multimodal_features',
+    'q108_audio_features',
+    'q114_video_frames',
+    'q115_semantic_dedup',
+    'q150_image_phash_dedup',
     # last certified r12
-    'q129_sql_ddl_lifecycle',
-    # last certified r11
-    'q118_png_features',
-    # last certified r12
-    'q130_embed_quantize',
-    'q131_doc_repetition',
-    'q132_funnel',
-    'q133_retention',
+    'q134_hopping_window',
+    'q135_anomaly_zscore',
+    'q136_event_transitions',
+    'q123_span_dedup',
+    'q124_bm25',
+    'q125_dsir_weights',
+    'q126_editdist_neardup',
+    'q127_tfidf_topterms',
+    'q128_stratified_sample',
+    'q120_jpeg_features',
+    'q57_quantiles',
+    'q59_vocab_topk',
+    'q63_exists_subquery',
+    'q64_explode_tokens',
+    'q65_string_agg',
+    'q66_unpivot',
+    'q67_regexp',
+    'q68_sequence',
+    'q69_bitwise',
+    'q70_date_arith',
+    'q71_array_funcs',
+    'q72_local_volume',
+    'q73_window_extras',
+    'q74_conditional_agg',
+    'q75_gopher_rules',
+    'q77_contamination',
+    'q78_returned_revenue',
+    'q79_median_stats',
+    'q80_set_ops_all',
+    'q81_grouping_id',
+    'q82_nation_volume',
+    'q83_important_stock',
+    'q84_uuid_type',
+    'q85_time_type',
+    'q86_min_cost_supplier',
+    'q87_order_priority',
+    'q88_forecast_revenue',
+    'q89_market_share',
+    'q90_nation_profit',
+    'q91_customer_distribution',
+    'q92_promo_revenue',
+    'q93_top_supplier',
 ]
-
-
-
 
 
 def _ordered() -> dict[str, QueryDef]:

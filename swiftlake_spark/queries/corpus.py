@@ -88,21 +88,15 @@ def q123_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     key = (app, sf_dir)
     grams = registry.get_persisted("q123_grams", key)
     if grams is None:
-        from swiftlake_spark.operators.parallelism import needs_spread
-
         level = storage_level_from_env("SWIFTLAKE_GRAMS_STORAGE")
-        g = gram_positions(d, "doc_id", "text", n=8)
         # r15 (guide §2.5): gram_positions spread-widens the md5 fold on
         # a narrow local scan (build 2.4 → 1.3 s cold).  The PERSISTED
-        # copy, though, is traversed every warm pass by two consumers,
-        # and caching it at defaultParallelism partitions costs ~0.2 s
-        # of extra per-task floor per pass — so when (and only when) the
-        # source scan was narrow enough for spread to have fired, the
-        # cache is re-keyed through an AQE-coalesced exchange on the
-        # dup-detection key.  At production scan widths both the spread
-        # and this exchange are no-ops (needs_spread is False).
-        if needs_spread(d.select("doc_id", "text")):
-            g = g.repartition(F.col("gh"))
+        # copy is traversed every warm pass by two consumers; when the
+        # spread fired, rekey_spread hash-partitions it on gh, the
+        # dup-detection aggregate's key, so that aggregate reads it
+        # co-partitioned instead of re-shuffling the round-robin spread
+        # partitions.  At production scan widths neither fires.
+        g = gram_positions(d, "doc_id", "text", n=8, rekey_spread=True)
         grams = registry.put_persisted("q123_grams", key, g.persist(level),
                                        app_id=app)
     spans = duplicate_spans(d, "doc_id", "text", n=8, min_docs=2, grams=grams)
@@ -573,23 +567,9 @@ LIMIT 100
 def q139_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from swiftlake_spark.operators.dedup import ngram_decontaminate
 
-    # the per-doc contamination relation is a deterministic function of
-    # (corpus, n, eval slice) — cache it per (session, sf_dir) like
-    # q115's verdict / q123's grams; the registry bounds the slot and
-    # releases it on clear()/engine.close()
-    app = spark.sparkContext.applicationId
-    out = registry.get_persisted("q139_contam", (app, sf_dir))
-    if out is None:
-        d = load(spark, sf_dir, "documents")
-        ev = d.filter(F.col("doc_id") % 53 == 0)
-        out = ngram_decontaminate(d, ev, "doc_id", "text", n=13, threshold=0.8)
-        # O(docs)-row relation: same tunable level as the other corpus
-        # artifacts (default DISK_ONLY — it must not compete with
-        # shuffle memory at corpus scale)
-        level = storage_level_from_env("SWIFTLAKE_GRAMS_STORAGE")
-        out = registry.put_persisted(
-            "q139_contam", (app, sf_dir), out.persist(level), app_id=app
-        )
+    d = load(spark, sf_dir, "documents")
+    ev = d.filter(F.col("doc_id") % 53 == 0)
+    out = ngram_decontaminate(d, ev, "doc_id", "text", n=13, threshold=0.8)
     return (
         out.select(
             F.col("id").alias("doc_id"), "n_tokens", "n_grams", "n_hit",

@@ -1584,21 +1584,13 @@ ORDER BY l_returnflag
 """,
 )
 def q107_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from swiftlake_spark.artifacts import registry
-
     # the EXACT percentile computed alongside the sketch is the
     # certification cost (by design — the user-facing operator is the
-    # sketch alone); it is deterministic per (corpus), so cache the
-    # 3-row verdict per (session, sf_dir) like q58/q115
-    app = spark.sparkContext.applicationId
-    cached = registry.get_persisted("q107_verdict", (app, sf_dir))
-    if cached is not None:
-        return cached
-
+    # sketch alone)
     li = load(spark, sf_dir, "lineitem")
     exact = F.expr("percentile(l_extendedprice, 0.5)")
     approx = F.expr("approx_percentile(l_extendedprice, 0.5)")
-    out = (
+    return (
         li.groupBy("l_returnflag")
         .agg(
             exact.alias("exact_p50"),
@@ -1606,5 +1598,3 @@ def q107_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("l_returnflag")
     )
-    return registry.put_persisted(
-        "q107_verdict", (app, sf_dir), out.persist(), app_id=app)

@@ -95,6 +95,27 @@ def test_query_caches_register_and_release(spark):
     assert registry.namespaces() == []
 
 
+def test_verdict_queries_cache_no_output(spark):
+    """Queries return their plan directly: building them registers no
+    session artifact, so a repeated run recomputes instead of reading a
+    cached result."""
+    from swiftlake_spark.artifacts import registry
+    from swiftlake_spark.queries import REGISTRY, _load_all
+    from tests.test_operators import SF
+
+    _load_all()
+    before = set(registry.namespaces())
+    for name in (
+        "q49_simhash_neardup",
+        "q50_ann_lsh_topk",
+        "q58_ivf_topk",
+        "q107_approx_percentile",
+        "q139_decontaminate",
+    ):
+        REGISTRY[name].fn(spark, SF)
+    assert set(registry.namespaces()) - before == set()
+
+
 def test_storage_level_env_validation(monkeypatch):
     monkeypatch.setenv("SWIFTLAKE_GRAMS_STORAGE", "MEMORY_ONLY")
     lvl = storage_level_from_env("SWIFTLAKE_GRAMS_STORAGE")

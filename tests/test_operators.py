@@ -182,6 +182,36 @@ def test_incremental_dedup_within_batch_and_persisted_bloom(spark, docs):
     assert with_bits == {k: tuple(v) for k, v in wb.items()}
 
 
+def test_incremental_dedup_bloom_params_reach_probe(spark, docs):
+    """A persisted bloom built with non-default (k, bits_per_pos) gives
+    the same flags as no pre-filter: the probe derives its positions
+    with the parameters the bits were built with."""
+    from swiftlake_spark.operators.dedup import (
+        bloom_bits,
+        incremental_dedup,
+        signature_index,
+    )
+
+    corpus = docs.filter(F.col("doc_id") < 40).select("doc_id", "text")
+    index_bands = signature_index(corpus, "doc_id", "text",
+                                  n_hashes=16, bands=8)
+    batch = docs.filter(F.col("doc_id") < 80).select(
+        (F.col("doc_id") + 1000).alias("doc_id"), "text")
+    key = F.concat_ws(":", F.col("band").cast("string"),
+                      F.col("bh").cast("string"))
+    bits = bloom_bits(index_bands.select(key.alias("bk")), "bk",
+                      k=3, bits_per_pos=12)
+
+    def flags(**kw):
+        return sorted(map(tuple, incremental_dedup(
+            index_bands, batch, "doc_id", "text", n_hashes=16, bands=8,
+            **kw).collect()))
+
+    filtered = flags(index_bloom_bits=bits, bloom_k=3, bloom_bits_per_pos=12)
+    assert filtered == flags(bloom_prefilter=False)
+    assert sum(r[1] for r in filtered) >= 40  # every indexed text is a dup
+
+
 def test_incremental_dedup_exact_dups_never_escape(spark):
     """Zero false negatives for exact duplicates, by construction:
     identical text → identical signature → every band collides, under
